@@ -81,13 +81,20 @@ object Tables {
     * (sfDir, table) so gated query builders pay a filesystem stat once
     * per JVM instead of a catalyst analyze+optimize pass per call
     * (~40 ms, measured as 12% of varda_annotate_multi's bench line when
-    * the gate read `optimizedPlan.stats`). */
+    * the gate read `optimizedPlan.stats`). Only a SUCCESSFUL stat is
+    * memoized: a failed one is printed and answers 0 for this call alone,
+    * never pinning both size gates to the small-input plan for good. */
   private val sizeCache = TrieMap.empty[(String, String), Long]
   def inputBytes(spark: SparkSession, sfDir: String, name: String): Long =
-    sizeCache.getOrElseUpdate((sfDir, name), {
+    sizeCache.getOrElse((sfDir, name), {
       val p = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try fs.getContentSummary(p).getLength catch { case _: Throwable => 0L }
+      try {
+        val n = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getContentSummary(p).getLength
+        sizeCache.put((sfDir, name), n); n
+      } catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] size stat of $p failed, size gates " +
+          s"take the small-input plan for this call: $e"); 0L }
     })
 
   /** Drop a session's memoized frames and view registration. For

@@ -41,14 +41,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the store's own — the scan plans against [[FreqStore.serveFileManifest]]
   *    and can never see a torn or superseded generation.
   *
-  * Rows are exactly `FreqStore.serve()`'s: (chromosome, position,
-  * reference, observed, numer, denom, freq_ppm), with denom =
-  * denom_cov + uncovPool × ploidy(chromosome) and freq_ppm =
-  * floor(numer·10⁶ / denom) (null when denom = 0) — spec-pinned equal to
-  * the DataFrame serving path. Executor-side reading uses parquet-hadoop
-  * directly (the component schemas are fixed and tiny), so no Spark
-  * internals are touched. Batch read only — writes go through the
-  * store's transactional [[FreqStore.commit]], never through SQL inserts. */
+  * `FreqStore.serve()`, `serveAsOf` and the point/range lookups all
+  * read through this scan. Rows are (chromosome, position, reference,
+  * observed, numer, denom, freq_ppm), with denom = denom_cov + uncovPool
+  * × ploidy(chromosome) and freq_ppm = numer·10⁶ div denom (truncating;
+  * null when denom = 0) — spec-pinned equal to the one-shot
+  * [[graft.varda.VardaOps.frequencyFrom]]. Executor-side reading uses
+  * parquet-hadoop directly (the component schemas are fixed and tiny),
+  * so no Spark internals are touched. Batch read only — writes go
+  * through the store's transactional [[FreqStore.commit]], never
+  * through SQL inserts. */
 class FreqStoreDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "freqstore"
 
@@ -121,12 +123,6 @@ object FreqStoreDataSource {
   @volatile private[graft] var lastPlannedColumns: Seq[String] = Nil
   /** Buckets surviving the most recent RUNTIME filter() re-prune. */
   @volatile private[graft] var lastRuntimeBuckets: Option[Set[Int]] = None
-  /** The (chromosome, position-range) predicate the most recent scan
-    * pushed into its parquet reads. */
-  @volatile private[graft] var lastPlannedRange: FreqStoreScanBuilder.PushedRange =
-    FreqStoreScanBuilder.PushedRange.empty
-  /** The per-partition row cap the most recent scan planned with. */
-  @volatile private[graft] var lastPlannedLimit: Option[Int] = None
   /** Whether the most recent scan answered COUNT(*) from footers. */
   @volatile private[graft] var lastPushedCountStar: Boolean = false
   /** A/B hook: force the row-based readers (local-mode benchmarking and
@@ -363,8 +359,6 @@ class FreqStoreScanBuilder(dir: String, asOf: Option[Long] = None,
     }
     FreqStoreDataSource.lastPlannedBuckets = buckets
     FreqStoreDataSource.lastPlannedColumns = required.fieldNames.toSeq
-    FreqStoreDataSource.lastPlannedRange = range
-    FreqStoreDataSource.lastPlannedLimit = limit
     FreqStoreDataSource.lastPushedCountStar = countStar
     val n = nPlan
     val (perBucket, uncov, bytes) = store.serveFileManifest(buckets, asOf)
@@ -457,6 +451,10 @@ object FreqStoreScanBuilder {
       posUpper: Option[Long]) extends Serializable {
     def isEmpty: Boolean =
       chromosome.isEmpty && posLower.isEmpty && posUpper.isEmpty
+    /** Plan-string form, e.g. `chromosome=7 AND position>=15000`. */
+    override def toString: String = Seq(chromosome.map(c => s"chromosome=$c"),
+      posLower.map(lo => s"position>=$lo"), posUpper.map(hi => s"position<=$hi"))
+      .flatten.reduceOption(_ + " AND " + _).getOrElse("none")
     /** Compile to the parquet filter (row-group statistics pruning +
       * record-level filtering via `ParquetReader.Builder.withFilter`). */
     def toParquetFilter: Option[org.apache.parquet.filter2.compat.FilterCompat.Filter] = {
@@ -593,9 +591,11 @@ class FreqStoreScan(perBucket: Map[Int, (Seq[String], Seq[String])],
   override def createReaderFactory(): PartitionReaderFactory =
     new FreqStoreReaderFactory(hadoopConf, required.fieldNames.toSeq, uncov,
       range, limit, columnar)
+  /** What the readers push, as `explain()` shows it. */
   override def description(): String =
     s"FreqStoreScan(buckets=${perBucket.keySet.toSeq.sorted.mkString(",")}, " +
-      s"columns=${required.fieldNames.mkString(",")})"
+      s"columns=${required.fieldNames.mkString(",")}, range=$range, " +
+      s"limit=${limit.fold("none")(_.toString)})"
 }
 
 object FreqStoreScan {
@@ -747,7 +747,7 @@ class FreqStoreReaderFactory(hadoopConf: Map[String, String],
   *    this scan instead of per-row get()s).
   *
   * Semantics are pinned row-identical to the row reader by
-  * FreqStoreDsv2Spec's serve()-parity suites. */
+  * FreqStoreDsv2Spec's `columnar=false` parity checks. */
 class FreqStoreColumnarPartitionReader(p: FreqStorePartition,
     hadoopConf: Map[String, String], columns: Seq[String], uncov: Long,
     range: FreqStoreScanBuilder.PushedRange, limit: Option[Int])

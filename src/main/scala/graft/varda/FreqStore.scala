@@ -973,18 +973,22 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
     }
   }
 
-  /** Serve ppm frequencies from the committed stores alone — the same
-    * three-frame join as the in-session state, no containment join and
-    * no history rescan at serve time. The commit-log high-water mark is
-    * pinned ONCE and every component reads strictly below it, so a
-    * commit landing mid-serve cannot skew one component ahead of
-    * another: readers get snapshot consistency from the log bound. */
-  def serve(): DataFrame = {
-    val upTo = highWater
-    VardaOps.serveFrom(
-      mergeRead("numer", upTo, None),
-      mergeRead("denom", upTo, None),
-      uncovFrame(upTo))
+  /** Serve ppm frequencies from the committed stores alone: the serving
+    * scan pinned to the log head as of THIS call, so a commit landing
+    * before the frame runs cannot appear in it (snapshot consistency). */
+  def serve(): DataFrame = serveScan(highWater)
+
+  /** The one serving read: the `freqstore` DSv2 scan
+    * ([[graft.sources.FreqStoreDataSource]]) pinned below `before` (no
+    * pin on an empty store). Each bucket's numer ⟕ denom join runs inside
+    * its own reader, in one job; a key predicate filtered onto the frame
+    * prunes buckets and pushes its range into the parquet reads. Opened
+    * by class name, so a missing `META-INF/services` entry cannot break
+    * the API. */
+  private def serveScan(before: Long): DataFrame = {
+    val r = spark.read.format(classOf[graft.sources.FreqStoreDataSource].getName)
+    (if (before == Long.MaxValue) r
+     else r.option("asOfGeneration", before - 1)).load(dir)
   }
 
   /** TIME-TRAVEL serve — the store's state AS OF generation `asOf`
@@ -1004,10 +1008,7 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   def serveAsOf(asOf: Long): DataFrame = {
     val before = math.addExact(asOf, 1L)
     validateAsOf(asOf, before)
-    VardaOps.serveFrom(
-      mergeRead("numer", before, None),
-      mergeRead("denom", before, None),
-      uncovFrame(before))
+    serveScan(before)
   }
 
   /** An as-of bound is only honest while every generation <= asOf is
@@ -1075,65 +1076,44 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   }
 
   /** Point lookup — the reference's flagship query [U GET /variants]:
-    * serve ONE (chromosome, position)'s frequencies by evaluating the
-    * shared bucket hash on the driver and opening only that bucket's
-    * directories (a plan-asserted O(store/nBuckets) read, vs the full
-    * [[serve]] frame). Row-equal to `serve()` filtered to the point. */
+    * the serving scan evaluates the bucket hash on the driver and opens
+    * only the point's bucket (a plan-asserted O(store/nBuckets) read, one
+    * job). Row-equal to `serve()` filtered to the point. */
   def lookup(chromosome: String, position: Long): DataFrame =
     lookupPoints(Seq((chromosome, position)))
 
-  /** Multi-point lookup for annotation-sized probes: prunes to the
-    * probe set's bucket directories, then restricts rows with an
-    * OR-chain predicate for small probe sets (pushable into the parquet
-    * scans) or a broadcast semi-join against the probe frame for large
-    * ones (a thousand-term OR would bloat the plan; the file-level
-    * bucket pruning already happened on the driver either way). */
+  /** Multi-point lookup for annotation-sized probes: the serving scan
+    * pinned to the current head, filtered by ONE predicate — an OR over
+    * the probes' chromosomes of `chromosome = c AND position IN (…)`.
+    * The scan's pushdown recognises that shape as a point set and opens
+    * only the probes' buckets; Spark evaluates an IN list past its
+    * InSet threshold against a hash set, so the one form serves any
+    * probe count without a per-value generated predicate. */
   def lookupPoints(points: Seq[(String, Long)]): DataFrame = {
     require(points.nonEmpty, "lookupPoints needs at least one point")
-    val upTo = highWater
-    val n = nBkts
-    val ks = points.map { case (c, p) => FreqStore.pointBucket(p, n) }.toSet
-    val restrict: DataFrame => DataFrame =
-      if (points.size <= 64) {
-        val pred = points.map { case (c, p) =>
-          col("chromosome") === c && col("position") === p }.reduce(_ || _)
-        df => df.filter(pred)
-      } else {
-        import spark.implicits._
-        val probe = points.toDF("chromosome", "position")
-        df => df.join(broadcast(probe), Seq("chromosome", "position"), "left_semi")
-      }
-    VardaOps.serveFrom(
-      restrict(mergeRead("numer", upTo, Some(ks))),
-      restrict(mergeRead("denom", upTo, Some(ks))),
-      uncovFrame(upTo))
+    val pred = points.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, ps) =>
+      col("chromosome") === c && col("position").isin(ps.map(_._2).distinct: _*)
+    }.reduce(_ || _)
+    serveScan(highWater).filter(pred)
   }
 
   /** Region-range lookup — the reference's region query [U GET
-    * /variants?region=chrom:begin-end]: serve every variant inside a
-    * genomic range from the committed store. Since the round-12
-    * single-column bucket layout, a range CAN name its buckets on the
-    * driver — it enumerates its cells (bounded by [[FreqStore.MaxRangeCells]])
-    * and hashes each, so the read opens only the matching bucket
-    * DIRECTORIES, like the point lookup. The range predicate also still
-    * PUSHES into the parquet reads, and [[compact]] writes the
-    * point-keyed components sorted by (chromosome, position) within
-    * each bucket file, so row-group min/max statistics trim the read
-    * further: O(range-rows + pruned footers), not O(store). A range too
-    * wide to enumerate falls back to the all-bucket listing with the
-    * sorted-layout statistics carrying the read. Row-equal to [[serve]]
-    * filtered to the range (RangeLookupSpec pins parity, the pushed
-    * filters, the sorted layout, and the bucket pruning). */
+    * /variants?region=chrom:begin-end]: every variant inside a genomic
+    * range, through the serving scan pinned to the current head. The
+    * scan enumerates the range's cells (bounded by
+    * [[FreqStore.MaxRangeCells]]) and hashes each, so it opens only the
+    * matching buckets, like the point lookup; the range also PUSHES into
+    * the parquet reads, and [[compact]] writes the point-keyed
+    * components sorted by (chromosome, position) within each bucket
+    * file, so row-group min/max statistics trim the read further:
+    * O(range-rows + pruned footers), not O(store). A range too wide to
+    * enumerate opens every bucket. Row-equal to [[serve]] filtered to the
+    * range (RangeLookupSpec pins parity, the pushed range, the sorted
+    * layout, and the bucket pruning). */
   def lookupRange(chromosome: String, begin: Long, end: Long): DataFrame = {
     require(begin <= end, s"empty range [$begin, $end]")
-    val upTo = highWater
-    val ks = FreqStore.rangeBuckets(begin, end, nBkts)
-    val pred = col("chromosome") === chromosome &&
-      col("position") >= begin && col("position") <= end
-    VardaOps.serveFrom(
-      mergeRead("numer", upTo, ks).filter(pred),
-      mergeRead("denom", upTo, ks).filter(pred),
-      uncovFrame(upTo))
+    serveScan(highWater).filter(col("chromosome") === chromosome &&
+      col("position") >= begin && col("position") <= end)
   }
 
   /** Range lookup under a SAMPLE SUBSET — the reference's combined
@@ -1666,9 +1646,6 @@ class FreqStore(spark: SparkSession, dir: String, nBuckets: Int = 16) {
   private[graft] def uncovPool(before: Long): Long =
     live(before).lastOption.map(_.uncov).getOrElse(0L)
 
-  private def uncovFrame(before: Long): DataFrame =
-    spark.range(1).select(lit(uncovPool(before)).as("uncov_pool"))
-
   private def readPaths(comp: String, paths0: Seq[Path]): DataFrame = {
     // an overlay bucket dir may be EMPTY (= "content is now nothing",
     // the merge-store deletion marker): it must win the latest-gen race
@@ -1920,9 +1897,9 @@ object FreqStore {
 
   /** The haploid chromosomes — ONE definition of the ploidy rule for
     * every Scala-side denominator derivation (the row and columnar
-    * DSv2 readers both build on it; the SQL serving path states the
-    * same rule inside serveFrom's expression). A naming change (e.g.
-    * 'M' vs 'MT') edits exactly this list. */
+    * DSv2 readers both build on it; the in-session and sample-filtered
+    * serving joins state the same rule inside serveFrom's expression).
+    * A naming change (e.g. 'M' vs 'MT') edits exactly this list. */
   private[graft] val HaploidChromosomes: Seq[String] = Seq("X", "Y", "MT")
   private[graft] def ploidyOf(chromosome: String): Long =
     if (HaploidChromosomes.contains(chromosome)) 1L else 2L

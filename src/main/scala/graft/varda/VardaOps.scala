@@ -513,8 +513,9 @@ object VardaOps {
     serveFrom(st.numer, st.denom, st.uncovPool)
 
   /** The serving join over explicit (numer, denom, uncovPool) frames —
-    * shared by the in-session [[FreqState]] and the committed
-    * [[FreqStore]] (which reads the same three stores from parquet). */
+    * shared by the in-session [[FreqState]], the committed store's
+    * sample-filtered lookups and the change-feed refold (the store's
+    * full-universe reads go through its bucket-local DSv2 scan). */
   private[graft] def serveFrom(numer: DataFrame, denom: DataFrame,
       uncovPool: DataFrame): DataFrame =
     numer
@@ -870,9 +871,8 @@ object VardaOps {
     * of variant points from the committed store through the pruned
     * bucket lookup ([[FreqStore.lookupPoints]]) — the driver-side hash
     * names each probe's bucket directory, so the scan opens
-    * O(probes/nBuckets) of the store instead of all of it
-    * (FreqStoreSpec pins the single-bucket claim via inputFiles). The
-    * probe set is a deterministic fixture slice (obs_id ≡ 1 mod 2999 —
+    * O(probes/nBuckets) of the store instead of all of it (FreqStoreSpec
+    * pins the single-bucket claim on the planned scan). The probe set is a deterministic fixture slice (obs_id ≡ 1 mod 2999 —
     * 1 point at sf0.001, ~34 at sf0.1), and the oracle is the one-shot
     * frequency SQL restricted to those points: the pruned serving path
     * must be indistinguishable from computing over everything. */

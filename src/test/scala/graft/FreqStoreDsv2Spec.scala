@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions.{count, lit, max, min, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DataSource V2 serving surface: `spark.read.format("freqstore")`
-  * must be row-identical to `FreqStore.serve()`, and point predicates
-  * from plain `spark.sql` must prune the scan to the probes' buckets
-  * via the same driver-side hash the API lookup uses. */
+  * — the read `FreqStore.serve()` and the lookups open — must be
+  * row-identical to the one-shot frequency computation over the
+  * committed batches, and point predicates from plain `spark.sql` must
+  * prune the scan to the probes' buckets via the driver-side hash. */
 class FreqStoreDsv2Spec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -23,37 +24,44 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
       r.getLong(4), r.getLong(5),
       if (r.isNullAt(6)) Long.MinValue else r.getLong(6))).toSet
 
-  private def builtStore(): (FreqStore, String) = {
-    val dir = tmpDir("fqs_dsv2")
-    val store = new FreqStore(spark, dir, nBuckets = 4)
-    val obs = Seq(
+  // the fixture's two import batches: generation 0 carries every
+  // coverage and sample row, generation 1 one more observation
+  private def obs0 = Seq(
       ("1", 5000L, "A", "C", 3), ("X", 5000L, "A", "C", 1),
       ("2", 700L, "G", "T", 2), ("7", 91000L, "T", "G", 4))
-      .toDF("chromosome", "position", "reference", "observed", "support")
-    val cov = Seq(
+    .toDF("chromosome", "position", "reference", "observed", "support")
+  private def obs1 = Seq(("1", 5000L, "A", "C", 2)).toDF(
+    "chromosome", "position", "reference", "observed", "support")
+  private def cov = Seq(
       (10L, "1", 4000L, 6000L, 1L, 2), (14L, "2", 600L, 800L, 2L, 5),
       (11L, "1", 4500L, 5500L, 1L, 2), (12L, "X", 4000L, 6000L, 2L, 5),
       (15L, "7", 90000L, 95000L, 1L, 2))
-      .toDF("region_id", "chromosome", "begin_pos", "end_pos",
-        "sample_id", "pool_size")
-    val smp = Seq((1L, 2, true), (2L, 5, true), (3L, 7, false))
-      .toDF("sample_id", "pool_size", "has_coverage")
-    store.commit(0, obs, cov, smp)
+    .toDF("region_id", "chromosome", "begin_pos", "end_pos",
+      "sample_id", "pool_size")
+  private def smp = Seq((1L, 2, true), (2L, 5, true), (3L, 7, false))
+    .toDF("sample_id", "pool_size", "has_coverage")
+
+  private def builtStore(): (FreqStore, String) = {
+    val dir = tmpDir("fqs_dsv2")
+    val store = new FreqStore(spark, dir, nBuckets = 4)
+    store.commit(0, obs0, cov, smp)
     // a second generation so the scan exercises newest-gen resolution
-    store.commit(1,
-      Seq(("1", 5000L, "A", "C", 2)).toDF(
-        "chromosome", "position", "reference", "observed", "support"),
-      cov.filter("false"), smp.filter("false"))
+    store.commit(1, obs1, cov.filter("false"), smp.filter("false"))
     (store, dir)
   }
 
-  test("full freqstore read is row-identical to serve()") {
+  test("full freqstore read is row-identical to the one-shot frequencyFrom") {
     val (store, dir) = builtStore()
     val viaSql = spark.read.format("freqstore").load(dir)
     assert(viaSql.schema.fieldNames.toSeq ==
       Seq("chromosome", "position", "reference", "observed",
         "numer", "denom", "freq_ppm"))
-    assert(rowSet(viaSql) == rowSet(store.serve()))
+    // serve() opens this same scan, so the independent anchor is the
+    // one-shot computation over both committed batches
+    val oneShot = VardaOps.frequencyFrom(obs0.unionByName(obs1), cov, smp,
+      withZyg = false)
+    assert(rowSet(viaSql) == rowSet(oneShot))
+    assert(rowSet(store.serve()) == rowSet(oneShot))
     assert(graft.sources.FreqStoreDataSource.lastPlannedBuckets.isEmpty,
       "an unfiltered scan must not prune")
   }
@@ -209,9 +217,10 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
       "SELECT * FROM freqr WHERE chromosome = '1' AND position BETWEEN 4000 AND 6000")
     assert(rowSet(got) == rowSet(store.serve()
       .filter("chromosome = '1' AND position BETWEEN 4000 AND 6000")))
-    val r = graft.sources.FreqStoreDataSource.lastPlannedRange
-    assert(r.chromosome.contains("1") && r.posLower.contains(4000L) &&
-      r.posUpper.contains(6000L), s"range not captured: $r")
+    val plan = got.queryExecution.executedPlan.toString
+    assert(plan.contains(
+      "range=chromosome=1 AND position>=4000 AND position<=6000"),
+      s"range not in the planned scan:\n$plan")
     // round-12 single-column layout: the range NAMES its buckets (cells
     // 4000>>11 .. 6000>>11 hashed) and the scan opens only those
     assert(graft.sources.FreqStoreDataSource.lastPlannedBuckets ==
@@ -224,9 +233,9 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
       "SELECT * FROM freqr WHERE chromosome = '1' AND position > 4999 AND position < 5001")
     assert(rowSet(got2) == rowSet(store.serve()
       .filter("chromosome = '1' AND position = 5000")))
-    val r2 = graft.sources.FreqStoreDataSource.lastPlannedRange
-    assert(r2.posLower.contains(5000L) && r2.posUpper.contains(5000L),
-      s"strict bounds not normalized: $r2")
+    val plan2 = got2.queryExecution.executedPlan.toString
+    assert(plan2.contains("position>=5000 AND position<=5000"),
+      s"strict bounds not normalized:\n$plan2")
 
     // an out-of-range window reads empty, not wrong
     assert(spark.sql(
@@ -237,8 +246,8 @@ class FreqStoreDsv2Spec extends AnyFunSuite {
     val (store, dir) = builtStore()
     val got = spark.read.format("freqstore").load(dir).limit(2)
     assert(got.count() == 2)
-    assert(graft.sources.FreqStoreDataSource.lastPlannedLimit.contains(2),
-      "limit not captured by the scan")
+    val plan = got.queryExecution.executedPlan.toString
+    assert(plan.contains("limit=2)"), s"limit not in the planned scan:\n$plan")
     // rows served under the cap are real served rows
     assert(rowSet(got).subsetOf(rowSet(store.serve())))
     // a limit past the store size returns everything

@@ -244,6 +244,7 @@ class FreqStoreSpec extends AnyFunSuite {
     // NOT executed until after the compact; `expected` comes from a
     // separate pre-compact frame.
     val planned = store.serve()
+    planned.queryExecution.executedPlan // the scan lists its files here
     val expected = freqKey(store.serve())
 
     // retainGens SMALLER than the number of generations this compact
@@ -510,9 +511,9 @@ class FreqStoreSpec extends AnyFunSuite {
     def bktsOf(files: Seq[String]) = files
       .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
       .flatMap("bkt=([0-9]+)".r.findFirstMatchIn(_)).map(_.group(1)).toSet
-    val lookupBkts = bktsOf(probe.inputFiles.toSeq)
+    val lookupBkts = bktsOf(ServingScans.files(probe))
     assert(lookupBkts.size == 1, s"lookup read buckets $lookupBkts")
-    assert(bktsOf(store.serve().inputFiles.toSeq).size > 2,
+    assert(bktsOf(ServingScans.files(store.serve())).size > 2,
       "fixture must spread buckets for the pruning assertion to mean anything")
 
     // multi-point probes prune to the probe set's buckets and agree row-wise
@@ -523,8 +524,8 @@ class FreqStoreSpec extends AnyFunSuite {
       assert(multi((c, p)) == served.collect {
         case ((`c`, `p`, _, _), v) => v._3 }.head)
 
-    // a LARGE probe set takes the broadcast semi-join path (> 64 probes;
-    // an OR-chain that long would bloat the plan) and must equal the
+    // a LARGE probe set (past Spark's InSet threshold, and over two
+    // chromosomes) rides the same one-predicate scan and must equal the
     // full serve over the probed keys
     val allPts = (0 until 64).map(i => ("1", 1000L + i * 4096L)) ++
       (0 until 10).map(i => ("2", 5000L + i * 4096L)) // absent points
@@ -532,6 +533,54 @@ class FreqStoreSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3)) ->
         ((r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     assert(big == served, "large-probe lookup diverged from serve()")
+  }
+
+  test("a collected point lookup is one serving scan and one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    val dir = tmpDir("fqs_onejob")
+    val store = new FreqStore(spark, dir, nBuckets = 8)
+    val obs = (0 until 16).map(i =>
+      ("1", 1000L + i * 4096L, "A", "C", 1 + i % 3)).toDF(
+      "chromosome", "position", "reference", "observed", "support")
+    val cov = Seq((0L, "1", 0L, 70000L, 1L, 2)).toDF(
+      "region_id", "chromosome", "begin_pos", "end_pos", "sample_id", "pool_size")
+    val smp = Seq((1L, 2, true), (9L, 3, false)).toDF(
+      "sample_id", "pool_size", "has_coverage")
+    store.commit(0, obs, cov, smp)
+
+    val sc = spark.sparkContext
+    val group = s"fqs-onejob-${System.nanoTime}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) seen.incrementAndGet()
+    }
+    val probe = store.lookup("1", 1000L + 5 * 4096L)
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup(group, "point lookup")
+      try probe.collect() finally sc.clearJobGroup()
+    } finally {
+      // listener events arrive asynchronously: wait until the listener
+      // has seen every job the scheduler ran for the group
+      val ran = sc.statusTracker.getJobIdsForGroup(group).length
+      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+      while (seen.get < ran && System.nanoTime < deadline) Thread.sleep(10)
+      sc.removeSparkListener(listener)
+    }
+    assert(rows.length == 1 && rows.head.getLong(4) == 1L + 5 % 3)
+    assert(seen.get == 1, s"point lookup ran ${seen.get} jobs")
+    // the plan is the one bucket-local scan: no pool broadcast, no join
+    val scans = ServingScans.batchScans(probe)
+    assert(scans.size == 1 &&
+      scans.head.scan.isInstanceOf[graft.sources.FreqStoreScan],
+      s"expected one FreqStoreScan, got ${scans.map(_.scan.description())}")
+    val broadcasts = ServingScans.collect(probe.queryExecution.executedPlan) {
+      case b: BroadcastExchangeLike => b }
+    assert(broadcasts.isEmpty,
+      s"point lookup plans a broadcast:\n${probe.queryExecution.executedPlan}")
   }
 
   test("expression-filtered lookup equals the one-shot over the sample subset") {

@@ -93,11 +93,11 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("varda_freq_lookup reads only its probe points' store buckets") {
     val df = SparkEntry.queries("varda_freq_lookup")(spark, sf0001)
-    val bkts = df.inputFiles.toSeq
+    val bkts = ServingScans.files(df)
       .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
       .flatMap("bkt=([0-9]+)".r.findFirstMatchIn(_)).map(_.group(1)).toSet
     val served = graft.varda.VardaOps.queries("varda_freq_incremental")(spark, sf0001)
-    val allBkts = served.inputFiles.toSeq
+    val allBkts = ServingScans.files(served)
       .filter(f => f.contains("comp=numer") || f.contains("comp=denom"))
       .flatMap("bkt=([0-9]+)".r.findFirstMatchIn(_)).map(_.group(1)).toSet
     assert(bkts.nonEmpty && bkts.size < allBkts.size,
@@ -139,8 +139,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // cosine kernels (block-pair enumeration over O(blocks) rows), and the
     // frequency family's dimension-sized coverage-less broadcast
     // source_vcf_file's one BNLJ is the 1-row #CHROM-header broadcast;
-    // varda_freq_incremental / varda_annotate_multi inherit the frequency
-    // family's dimension-sized coverage-less broadcast;
+    // varda_annotate_multi inherits the frequency family's
+    // dimension-sized coverage-less broadcast, and the sample-filtered
+    // store lookups and change-feed refolds end in serveFrom's 1-row
+    // coverage-less pool broadcast (the full-universe store reads —
+    // serve, serveAsOf, the point and range lookups — are one DSv2 scan
+    // and must plan none);
     // stream_late_watermark's and win_global_rank's (and win_ntile_pct's
     // and pack_sequences', via GlobalRank) is the 1-row key-bounds
     // broadcast that makes their arithmetic chunking deterministic;
@@ -165,14 +169,12 @@ class PlanShapeSpec extends AnyFunSuite {
       "sink_vcf",
       "sim_topk_cosine", "dedup_near_embedding", "varda_frequency",
       "agg_freq_ratio", "varda_sample_expr", "varda_annotate",
-      "source_vcf_file", "varda_freq_incremental", "varda_freq_lookup",
-      "varda_freq_lookup_range", "varda_freq_lookup_range_expr",
+      "source_vcf_file", "varda_freq_lookup_range_expr",
       "varda_freq_lookup_expr", "varda_freq_lookup_multi",
-      "varda_freq_asof", // serveFrom's 1-row coverage-less pool broadcast
-      "stream_store_changes_freq", // refoldChanges ends in the same serveFrom
+      "stream_store_changes_freq", // refoldChanges ends in serveFrom
       "stream_store_changes_bootstrap", // bootstrap refold: same serveFrom
       "sink_vcf_multi", // inherits the per-file #CHROM-header broadcast
-      "varda_annotate_store", "varda_annotate_multi",
+      "varda_annotate_multi",
       "stream_late_watermark", "win_global_rank",
       "pack_sequences", "sample_mixture", "sample_temperature",
       "text_perplexity", "varda_sample_retract", "text_line_dedup", "varda_trio_denovo")

@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The committed store's region-range serving tier [U GET
   * /variants?region=chrom:begin-end]: `lookupRange` must be row-equal to
   * `serve()` filtered to the range, its range predicate must reach the
-  * parquet scans (PushedFilters), and compaction must leave the
-  * point-keyed components SORTED by (chromosome, position) within each
-  * bucket file — the layout that turns the pushed predicate into
-  * row-group skipping at scale. */
+  * parquet reads (the serving scan's pushed range), and compaction must
+  * leave the point-keyed components SORTED by (chromosome, position)
+  * within each bucket file — the layout that turns the pushed predicate
+  * into row-group skipping at scale. */
 class RangeLookupSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -66,10 +66,10 @@ class RangeLookupSpec extends AnyFunSuite {
     val store = buildStore(tmpDir("fqs_rangeprune"))
     def bktsOf(files: Seq[String]) = files.flatMap(f =>
       "bkt=(\\d+)".r.findFirstMatchIn(f).map(_.group(1).toInt)).toSet
-    val all = bktsOf(store.serve().inputFiles.toSeq)
+    val all = bktsOf(ServingScans.files(store.serve()))
     assert(all.size >= 3, s"fixture must spread buckets, got $all")
     val expect = FreqStore.rangeBuckets(20000L, 24000L, store.nBkts).get
-    val got = bktsOf(store.lookupRange("7", 20000L, 24000L).inputFiles.toSeq)
+    val got = bktsOf(ServingScans.files(store.lookupRange("7", 20000L, 24000L)))
     assert(got.subsetOf(expect),
       s"range read opened buckets outside its cells': $got vs $expect")
     assert(got.size < all.size,
@@ -80,26 +80,25 @@ class RangeLookupSpec extends AnyFunSuite {
 
   test("the range predicate reaches the parquet scans as pushed filters") {
     val store = buildStore(tmpDir("fqs_rangepush"))
-    // inspect the scans' own metadata — the plan's toString elides long
-    // PushedFilters lists
-    val scans = store.lookupRange("7", 15000L, 30000L)
-      .queryExecution.executedPlan.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      }.flatten
-    // numer and denom reads both carry the full pushed range
-    assert(scans.size >= 2, s"expected numer+denom scans, got ${scans.size}")
+    // the ONE serving scan reads numer and denom of each bucket; its
+    // planned description states the range its readers push into both
+    // components' parquet reads
+    val df = store.lookupRange("7", 15000L, 30000L)
+    val scans = ServingScans.batchScans(df)
+    assert(scans.size == 1, s"expected one serving scan, got ${scans.size}")
     for (sc <- scans) {
-      val pushed = sc.metadata("PushedFilters")
-      assert(pushed.contains("GreaterThanOrEqual(position,15000)"),
+      val pushed = sc.scan.description()
+      assert(pushed.contains("position>=15000"),
         s"range lower bound not pushed: $pushed")
-      assert(pushed.contains("LessThanOrEqual(position,30000)"),
+      assert(pushed.contains("position<=30000"),
         s"range upper bound not pushed: $pushed")
-      assert(pushed.contains("EqualTo(chromosome,7)"),
+      assert(pushed.contains("chromosome=7"),
         s"chromosome equality not pushed: $pushed")
     }
+    // ... and explain() shows it
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("range=chromosome=7 AND position>=15000 AND " +
+      "position<=30000"), s"pushed range missing from the plan:\n$plan")
   }
 
   test("compaction leaves point-keyed bucket files sorted by (chromosome, position)") {
