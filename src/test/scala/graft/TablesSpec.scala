@@ -12,7 +12,7 @@ class TablesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("a failed table stat is not memoized; a later stat returns the real size") {
-    val d = Files.createTempDirectory(Paths.get("/root/repo/target"), "tables_stat")
+    val d = Files.createTempDirectory(Paths.get("target").toAbsolutePath, "tables_stat")
       .toString
     assert(Tables.inputBytes(spark, d, "orders") == 0L,
       "a missing table has no bytes to report")
